@@ -82,6 +82,15 @@ final case class ComparisonResult(
   *  - persisted frames use MEMORY_AND_DISK and are surfaced for explicit
   *    release.
   *
+  * Cached layouts: the keyed caches (the slim sides, the joined slim
+  * frame) keep their hash(keys) layout visible to every downstream plan
+  * because `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`
+  * defaults to `false` — `persist()` then plans the cached query with
+  * AQE's final-stage shuffle optimizations switched off, so the cache
+  * reports the partitioning it was built with. The engine, and the graph
+  * and dedup loops that rely on the same property, never set the conf;
+  * PlanSpec's exchange pins fail if a Spark upgrade flips that default.
+  *
   * Scale notes: the full-outer join (J1) can never broadcast — it
   * shuffle-partitions both (slim) sides by the primary keys, and the
   * downstream key-wise aggregations and the fold-back reuse that hash
@@ -535,10 +544,8 @@ object Comparison {
     * aboard, and the old post-window distinct pass disappears — at the
     * sf100 rung that sort+distinct dominated the report materialization.
     * ONE slim exchange in the whole report, pinned explicitly (see the
-    * repartition below; PlanSpec asserts the count): the report plans on
-    * the consumer side, outside the cached-partitioning conf scope, so
-    * "reuse the slim join's partitioning" is not something the planner
-    * can see there — left to itself it exchanged the slim rows twice.
+    * repartition below; PlanSpec asserts the count) — left to itself the
+    * planner exchanged the slim rows twice.
     */
   private def rowLevelReport(
       datasetName: String,
@@ -547,9 +554,8 @@ object Comparison {
       nPartitions: Int): DataFrame = {
     val keyColumns = keyCols.map(col)
     // ONE exchange for the whole report, pinned explicitly (r15): the
-    // report is lazy and materializes on the CONSUMER side, outside the
-    // cached-partitioning conf scope compareDataFrames sets — so the
-    // planner cannot see the slim caches' hash(keys) layout there and
+    // aggregation picks its exchange from its full grouping set, which
+    // does not satisfy the window's keys-only clustering, so the planner
     // answered with TWO slim exchanges (traced: the groupBy exchanged by
     // (keys, status, matched), then the duplicate-count window re-exchanged
     // the same rows by the keys alone). Repartitioning by the KEYS first
@@ -626,8 +632,8 @@ object Comparison {
     * 16 GB executor, and the broadcast cost is flat while Bloom always
     * pays its filter build plus a second pass. Deployments with wide
     * composite keys or smaller executors tune the cutover DOWN via
-    * [[BroadcastMismatchKeysMaxConf]]; the sweep bench A/Bs both
-    * branches through exactly that knob.
+    * [[BroadcastMismatchKeysMaxConf]] (setting it to 0 forces the Bloom
+    * branch, which is how ComparisonSpec covers it).
     */
   private val BroadcastMismatchKeysMax = 4000000L
   val BroadcastMismatchKeysMaxConf = "spark.graft.compare.broadcastMismatchKeysMax"
@@ -825,29 +831,6 @@ object Comparison {
       sourceDf: DataFrame,
       targetDf: DataFrame,
       params: DatasetParams): ComparisonResult = {
-    // The slim sides are cached PRE-PARTITIONED by the primary keys, and
-    // everything keyed downstream — the full-outer join, the match stats,
-    // the side counts, the fold-back — reuses that one exchange per side.
-    // InMemoryRelation only keeps a cached layout visible to the planner
-    // under canChangeCachedPlanOutputPartitioning=false (the PageRank
-    // lesson, Graphs.scala); scope it around construction exactly.
-    val cacheKey = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val prevCacheConf = spark.conf.getOption(cacheKey)
-    spark.conf.set(cacheKey, "false")
-    try buildComparison(spark, sourceDf, targetDf, params)
-    finally {
-      prevCacheConf match {
-        case Some(v) => spark.conf.set(cacheKey, v)
-        case None => spark.conf.unset(cacheKey)
-      }
-    }
-  }
-
-  private def buildComparison(
-      spark: SparkSession,
-      sourceDf: DataFrame,
-      targetDf: DataFrame,
-      params: DatasetParams): ComparisonResult = {
     val keyCols = params.primaryKeys
     val keyColumns = keyCols.map(col)
     val rawSrc = project(sourceDf, params)
@@ -896,10 +879,10 @@ object Comparison {
     // small inputs it spread kilobyte partitions over dozens of tasks and
     // every downstream stage (join, stats, window, fold-back) paid a full
     // task-launch wave for microseconds of work per task; AQE cannot
-    // repair it because the engine deliberately pins cached-plan
-    // partitioning (canChangeCachedPlanOutputPartitioning=false), which
-    // also disables coalescing inside the cached plans. Both sides use
-    // the SAME count, so the full-outer join stays exchange-free.
+    // repair it because a persisted plan is planned without AQE's
+    // final-stage shuffle optimizations, coalescing included (see the
+    // object scaladoc). Both sides use the SAME count, so the full-outer
+    // join stays exchange-free.
     val slimPartitions: Int = {
       val targetBytes = spark.conf.getOption(SlimPartitionBytesConf)
         .map(_.toLong).getOrElse(SlimPartitionBytes)

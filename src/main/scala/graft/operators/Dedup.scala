@@ -1002,46 +1002,6 @@ object Dedup {
       smallGraphEdges: Long = 65536L): DataFrame =
     connectedComponentsWithRounds(pairs, aCol, bCol, maxRounds, smallGraphEdges)._1
 
-  /** [[connectedComponents]] plus the number of label-propagation rounds it
-    * took to converge — the observable the log-rounds complexity claim is
-    * pinned on (rounds ≈ log₂ diameter; see the chain/giant-component
-    * stress in [[graft.tools.SkewBench]] and OperatorsSpec).
-    */
-  private[graft] def connectedComponentsWithRounds(
-      pairs: DataFrame,
-      aCol: String,
-      bCol: String,
-      maxRounds: Int = 25,
-      smallGraphEdges: Long = 65536L): (DataFrame, Int) = {
-    val spark = pairs.sparkSession
-    val cacheKey = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val prevCacheConf = spark.conf.getOption(cacheKey)
-    spark.conf.set(cacheKey, "false")
-    val (labels, round) = try {
-      connectedComponentsLoop(pairs, aCol, bCol, maxRounds, smallGraphEdges)
-    } finally {
-      prevCacheConf match {
-        case Some(v) => spark.conf.set(cacheKey, v)
-        case None => spark.conf.unset(cacheKey)
-      }
-    }
-    (labels, round)
-  }
-
-  /** The label-propagation loop, planned under the cached-partitioning
-    * conf [[connectedComponentsWithRounds]] scopes around it.
-    *
-    * The edge list is a MATERIALIZED columnar cache hash-partitioned +
-    * sorted on `dst` (the step-(a) join key): with
-    * `canChangeCachedPlanOutputPartitioning=false` every round's
-    * neighbor-min join then needs neither exchange nor sort on the 2|E|-row
-    * side — a lazy localCheckpoint surfaces UnknownPartitioning and
-    * re-exchanged the full edge set each round (the exact pathology the
-    * PageRank sf10 trace exposed, [[graft.operators.Graphs.pageRank]]).
-    * The operator is already eager (one scalar action per round), so the
-    * cache is released before returning — persist keeps lineage, making
-    * that safe.
-    */
   /** Driver union-find over a gate-bounded doubled edge list — identical
     * min-id labeling to the distributed loop (union-by-min keeps every
     * root the min of its set; strings compare by UTF-8 bytes, matching
@@ -1094,12 +1054,28 @@ object Dedup {
       StructType(Seq(StructField("node", nodeType), StructField("component", nodeType))))
   }
 
-  private def connectedComponentsLoop(
+  /** [[connectedComponents]] plus the number of label-propagation rounds it
+    * took to converge — the observable the log-rounds complexity claim is
+    * pinned on (rounds ≈ log₂ diameter; see the chain/giant-component
+    * stress in [[graft.tools.SkewBench]] and OperatorsSpec).
+    *
+    * The edge list is a MATERIALIZED columnar cache hash-partitioned +
+    * sorted on `dst` (the step-(a) join key): the cache keeps that layout
+    * visible to the planner (see [[graft.core.Comparison]] on cached
+    * layouts), so every round's neighbor-min join needs neither exchange
+    * nor sort on the 2|E|-row side — a lazy localCheckpoint surfaces
+    * UnknownPartitioning and re-exchanged the full edge set each round
+    * (the exact pathology the PageRank sf10 trace exposed,
+    * [[graft.operators.Graphs.pageRank]]). The operator is already eager
+    * (one scalar action per round), so the cache is released before
+    * returning — persist keeps lineage, making that safe.
+    */
+  private[graft] def connectedComponentsWithRounds(
       pairs: DataFrame,
       aCol: String,
       bCol: String,
-      maxRounds: Int,
-      smallGraphEdges: Long): (DataFrame, Int) = {
+      maxRounds: Int = 25,
+      smallGraphEdges: Long = 65536L): (DataFrame, Int) = {
     // undirected, deduped edge list — reused every round
     val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
       .union(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))

@@ -346,59 +346,49 @@ object Graphs {
       seedCol: String,
       maxHops: Int = 3): DataFrame = {
     require(maxHops >= 1 && maxHops <= 50, s"maxHops out of range: $maxHops")
-    val spark = pairs.sparkSession
     // The PageRank adjacency discipline (r15, guide §2.4): the adjacency is
-    // cached HASH-PARTITIONED by the probe key and sorted, and the conf
-    // below keeps that layout visible to every hop's join — without it the
-    // hop joins planned sort-merge against the stats-blind checkpointed
-    // frontier and RE-EXCHANGED all 2|E| adjacency rows EVERY HOP (traced
-    // r15 at sf0.1: hops 2 and 3 each re-shuffled the full 2.39M-row
-    // adjacency, ~10 of the query's 29 executor-CPU seconds; at the sf100
-    // rung that is 239M rows per hop). With the layout visible only the
-    // dwindling frontier moves per hop, at every scale.
-    val cacheKey = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val prevCacheConf = spark.conf.getOption(cacheKey)
-    spark.conf.set(cacheKey, "false")
-    try {
-      val edges = canonicalEdges(pairs, aCol, bCol).persist()
-      val adj = edges.select(col("lo").as("u"), col("hi").as("v"))
-        .union(edges.select(col("hi").as("u"), col("lo").as("v")))
-        .repartition(col("u"))
-        .sortWithinPartitions("u")
-        .persist()
-      adj.count() // materialize so edges can release and hops plan against the cache
-      edges.unpersist(false)
-      var dist = seeds
-        .filter(col(seedCol).isNotNull)
-        .select(col(seedCol).as("node")).distinct()
-        .withColumn("hops", lit(0L))
+    // cached HASH-PARTITIONED by the probe key and sorted, and the cache
+    // keeps that layout visible to every hop's join (see
+    // [[graft.core.Comparison]] on cached layouts) — a hop join that cannot
+    // see it plans sort-merge against the stats-blind checkpointed frontier
+    // and RE-EXCHANGES all 2|E| adjacency rows EVERY HOP (traced r15 at
+    // sf0.1: hops 2 and 3 each re-shuffled the full 2.39M-row adjacency,
+    // ~10 of the query's 29 executor-CPU seconds; at the sf100 rung that
+    // is 239M rows per hop). With the layout visible
+    // only the dwindling frontier moves per hop, at every scale.
+    val edges = canonicalEdges(pairs, aCol, bCol).persist()
+    val adj = edges.select(col("lo").as("u"), col("hi").as("v"))
+      .union(edges.select(col("hi").as("u"), col("lo").as("v")))
+      .repartition(col("u"))
+      .sortWithinPartitions("u")
+      .persist()
+    adj.count() // materialize so edges can release and hops plan against the cache
+    edges.unpersist(false)
+    var dist = seeds
+      .filter(col(seedCol).isNotNull)
+      .select(col(seedCol).as("node")).distinct()
+      .withColumn("hops", lit(0L))
+      .localCheckpoint()
+    var frontier = dist
+    var hop = 0L
+    var exhausted = false
+    while (hop < maxHops && !exhausted) {
+      val next = frontier.select(col("node").as("u"))
+        .join(adj, Seq("u"))
+        .select(col("v").as("node")).distinct()
+        .join(dist.select("node"), Seq("node"), "left_anti")
+        .withColumn("hops", lit(hop + 1L))
         .localCheckpoint()
-      var frontier = dist
-      var hop = 0L
-      var exhausted = false
-      while (hop < maxHops && !exhausted) {
-        val next = frontier.select(col("node").as("u"))
-          .join(adj, Seq("u"))
-          .select(col("v").as("node")).distinct()
-          .join(dist.select("node"), Seq("node"), "left_anti")
-          .withColumn("hops", lit(hop + 1L))
-          .localCheckpoint()
-        if (next.isEmpty) exhausted = true
-        else {
-          dist = dist.union(next).localCheckpoint()
-          frontier = next
-          hop += 1
-          iterGc() // opt-in: drop the superseded hop's shuffles/blocks
-        }
-      }
-      adj.unpersist(false) // dist is checkpointed; nothing re-reads the cache
-      dist
-    } finally {
-      prevCacheConf match {
-        case Some(v) => spark.conf.set(cacheKey, v)
-        case None => spark.conf.unset(cacheKey)
+      if (next.isEmpty) exhausted = true
+      else {
+        dist = dist.union(next).localCheckpoint()
+        frontier = next
+        hop += 1
+        iterGc() // opt-in: drop the superseded hop's shuffles/blocks
       }
     }
+    adj.unpersist(false) // dist is checkpointed; nothing re-reads the cache
+    dist
   }
 
   // (n, deg) over the canonical undirected edge relation
@@ -548,11 +538,9 @@ object Graphs {
     * in EVERY iteration because of it; (2) compressed column batches hold
     * three-long rows at ~⅓ the deserialized row-cache footprint, which at
     * sf10 was 12 GB of heap pressing the GC into multi-second stalls.
-    * Partitioning preservation requires
-    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false`
-    * (Spark 4 defaults it true, letting AQE re-plan cached layouts); it is
-    * set-and-restored around construction — iteration plans are created
-    * here, so the scope is exact. Only the |V|-row rank frame (which
+    * Partitioning preservation rests on Spark's default cached-plan
+    * planning (see [[graft.core.Comparison]] on cached layouts; PlanSpec
+    * pins the zero-exchange iteration). Only the |V|-row rank frame (which
     * carries its node's degree, so no per-iteration degree join exists)
     * shuffles per iteration; the contribution aggregation partial-combines
     * map-side before its |V|-bounded shuffle, and the rank rebuild joins
@@ -576,9 +564,7 @@ object Graphs {
   private[graft] final case class PrGraph(adj: DataFrame, nodes: DataFrame, b0: DataFrame)
 
   /** Build + MATERIALIZE the adjacency/node caches (see [[pageRank]]'s
-    * scaladoc for why eager, why persist-not-checkpoint, and why the
-    * cached-partitioning conf must be false while this and all iteration
-    * planning run).
+    * scaladoc for why eager and why persist-not-checkpoint).
     */
   private[graft] def buildPrGraph(
       pairs: DataFrame,
@@ -695,45 +681,34 @@ object Graphs {
     require(tolPpm >= 1 && tolPpm <= 1000000, s"tolPpm must be ppm, got $tolPpm")
     require(maxIters >= 1 && maxIters <= 50, s"maxIters must be in [1, 50], got $maxIters")
     require(dampPpm >= 0 && dampPpm <= 1000000, s"dampPpm must be ppm, got $dampPpm")
-    val spark = pairs.sparkSession
-    val cacheKey = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val prevCacheConf = spark.conf.getOption(cacheKey)
-    spark.conf.set(cacheKey, "false")
-    try {
-      val g = buildPrGraph(pairs, aCol, bCol, scale)
-      // b0 is a broadcast 1-row frame either way; reading the scalar here
-      // is the same bounded collect the iteration plans embed
-      val b0 = g.b0.collect().headOption.map(_.getLong(0)).getOrElse(0L)
-      val tol = math.max(1L, b0 * tolPpm / 1000000L)
-      var ranks = prInit(g).localCheckpoint(false)
-      var it = 0
-      var delta = Long.MaxValue
-      while (it < maxIters && delta > tol) {
-        val next = prStep(ranks, g, dampPpm).localCheckpoint(false)
-        // the delta probe is the action that materializes `next`; its two
-        // inputs are |V|-row checkpointed frames, its output one scalar
-        val row = next.select(col("node"), col("rank_scaled").as("__r1"))
-          .join(ranks.select(col("node"), col("rank_scaled").as("__r0")), Seq("node"))
-          .agg(max(abs(col("__r1") - col("__r0"))))
-          .collect()(0)
-        delta = if (row.isNullAt(0)) 0L else row.getLong(0)
-        releaseCheckpoint(ranks) // superseded generation; `next` is materialized
-        ranks = next
-        it += 1
-        // opt-in, and only AFTER the reassignment: the superseded frame's
-        // plan (which pins its round's ShuffleDependencies) must be
-        // unreachable before the GC can hand it to ContextCleaner
-        iterGc()
-        System.err.println(s"[pageRankConverged] iter $it max|drank|=$delta tol=$tol")
-      }
-      (ranks.select(col("node"), col("rank_scaled"))
-        .withColumn("n_iters", lit(it.toLong)), it)
-    } finally {
-      prevCacheConf match {
-        case Some(v) => spark.conf.set(cacheKey, v)
-        case None => spark.conf.unset(cacheKey)
-      }
+    val g = buildPrGraph(pairs, aCol, bCol, scale)
+    // b0 is a broadcast 1-row frame either way; reading the scalar here
+    // is the same bounded collect the iteration plans embed
+    val b0 = g.b0.collect().headOption.map(_.getLong(0)).getOrElse(0L)
+    val tol = math.max(1L, b0 * tolPpm / 1000000L)
+    var ranks = prInit(g).localCheckpoint(false)
+    var it = 0
+    var delta = Long.MaxValue
+    while (it < maxIters && delta > tol) {
+      val next = prStep(ranks, g, dampPpm).localCheckpoint(false)
+      // the delta probe is the action that materializes `next`; its two
+      // inputs are |V|-row checkpointed frames, its output one scalar
+      val row = next.select(col("node"), col("rank_scaled").as("__r1"))
+        .join(ranks.select(col("node"), col("rank_scaled").as("__r0")), Seq("node"))
+        .agg(max(abs(col("__r1") - col("__r0"))))
+        .collect()(0)
+      delta = if (row.isNullAt(0)) 0L else row.getLong(0)
+      releaseCheckpoint(ranks) // superseded generation; `next` is materialized
+      ranks = next
+      it += 1
+      // opt-in, and only AFTER the reassignment: the superseded frame's
+      // plan (which pins its round's ShuffleDependencies) must be
+      // unreachable before the GC can hand it to ContextCleaner
+      iterGc()
+      System.err.println(s"[pageRankConverged] iter $it max|drank|=$delta tol=$tol")
     }
+    (ranks.select(col("node"), col("rank_scaled"))
+      .withColumn("n_iters", lit(it.toLong)), it)
   }
 
   def pageRank(
@@ -745,33 +720,22 @@ object Graphs {
       scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1 && iters <= 50, s"iters must be in [1, 50], got $iters")
     require(dampPpm >= 0 && dampPpm <= 1000000, s"dampPpm must be ppm, got $dampPpm")
-    val spark = pairs.sparkSession
-    val cacheKey = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val prevCacheConf = spark.conf.getOption(cacheKey)
-    spark.conf.set(cacheKey, "false")
-    try {
-      val g = buildPrGraph(pairs, aCol, bCol, scale)
-      var ranks = prInit(g).localCheckpoint(false)
-      for (_ <- 1 to iters) {
-        val next = prStep(ranks, g, dampPpm).localCheckpoint(false)
-        // Under the iteration-GC lever each round materializes eagerly so
-        // the superseded rank frame (and the shuffle files only it
-        // reaches) can be dropped before the next round runs; the lazy
-        // default leaves materialization to the caller's one action.
-        if (iterGcEnabled) {
-          next.queryExecution.toRdd.count()
-          releaseCheckpoint(ranks)
-        }
-        ranks = next
-        // after the reassignment — see pageRankConverged's loop comment
-        iterGc()
+    val g = buildPrGraph(pairs, aCol, bCol, scale)
+    var ranks = prInit(g).localCheckpoint(false)
+    for (_ <- 1 to iters) {
+      val next = prStep(ranks, g, dampPpm).localCheckpoint(false)
+      // Under the iteration-GC lever each round materializes eagerly so
+      // the superseded rank frame (and the shuffle files only it
+      // reaches) can be dropped before the next round runs; the lazy
+      // default leaves materialization to the caller's one action.
+      if (iterGcEnabled) {
+        next.queryExecution.toRdd.count()
+        releaseCheckpoint(ranks)
       }
-      ranks.select(col("node"), col("rank_scaled"))
-    } finally {
-      prevCacheConf match {
-        case Some(v) => spark.conf.set(cacheKey, v)
-        case None => spark.conf.unset(cacheKey)
-      }
+      ranks = next
+      // after the reassignment — see pageRankConverged's loop comment
+      iterGc()
     }
+    ranks.select(col("node"), col("rank_scaled"))
   }
 }

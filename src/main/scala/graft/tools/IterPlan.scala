@@ -6,8 +6,7 @@ import org.apache.spark.sql.execution.ExplainMode
 /** Dump the PageRank IN-ITERATION physical plan (the frame each loop round
   * materializes), so the zero-adjacency-exchange claim is checkable from a
   * committed file instead of a quoted trace. Uses the operator's own
-  * `buildPrGraph`/`prInit`/`prStep` (what the loop runs), under the same
-  * cached-partitioning conf scope the loop pins.
+  * `buildPrGraph`/`prInit`/`prStep` (what the loop runs).
   *
   * Usage: `IterPlan <sfDir> [outFile]`
   */
@@ -24,8 +23,6 @@ object IterPlan {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val cacheKey = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    spark.conf.set(cacheKey, "false")
     val g = graft.operators.Graphs.buildPrGraph(
       graft.Queries.partEdges(spark, sfDir), "pa", "pb", 1000000000000L)
     val step = graft.operators.Graphs.prStep(

@@ -850,27 +850,42 @@ class ComparisonSpec extends SparkSpec {
         } yield 1L).sum
       }.sum
     }.toMap
-    val res = Comparison.compareDataFrames(
-      spark,
-      rnd.shuffle(srcRows).map(r => (r.id, r.a, r.b, r.c)).toDF("id", "a", "b", "c"),
-      rnd.shuffle(tgtRows).map(r => (r.id, r.a, r.b, r.c)).toDF("id", "a", "b", "c"),
-      DatasetParams("prop", Seq("id")))
-    val o = res.overallTestReport.collect().head
-    assert(o.getAs[Map[String, Long]]("count") ==
-      Map("source" -> srcRows.size.toLong, "target" -> tgtRows.size.toLong))
-    assert(o.getAs[Long]("matched_count") == expMatched)
-    assert(o.getAs[Map[String, Long]]("duplicate_count") ==
-      Map("source" -> expDups._1, "target" -> expDups._2))
-    assert(o.getAs[Map[String, Long]]("missing_rows") ==
-      Map("source" -> expMissSrc, "target" -> expMissTgt))
-    assert(o.getAs[String]("test_status") == "FAILED")
-    val gotCol = res.colLvlTestReport.collect()
-      .map(r => r.getAs[String]("column_name") ->
-        r.getAs[Number]("unmatched_rows_count").longValue()).toMap
-    assert(gotCol == expCol)
-    assert(res.unmatchedRecords.keySet ==
-      expCol.collect { case (c, n) if n > 0 => s"prop/$c" }.toSet)
-    res.unpersist()
+    val srcTuples = rnd.shuffle(srcRows).map(r => (r.id, r.a, r.b, r.c))
+    val tgtTuples = rnd.shuffle(tgtRows).map(r => (r.id, r.a, r.b, r.c))
+    // Two passes over the same rows: the default broadcast refetch, and
+    // the Bloom-pruned refetch (a mismatch-key cutover of 0 forces it; at
+    // the default it needs over 4M mismatched keys), on a child session so
+    // the cutover never reaches the shared one.
+    def check(session: org.apache.spark.sql.SparkSession, bloom: Boolean): Unit = {
+      val res = Comparison.compareDataFrames(
+        session,
+        session.createDataFrame(srcTuples).toDF("id", "a", "b", "c"),
+        session.createDataFrame(tgtTuples).toDF("id", "a", "b", "c"),
+        DatasetParams("prop", Seq("id")))
+      val o = res.overallTestReport.collect().head
+      assert(o.getAs[Map[String, Long]]("count") ==
+        Map("source" -> srcRows.size.toLong, "target" -> tgtRows.size.toLong))
+      assert(o.getAs[Long]("matched_count") == expMatched)
+      assert(o.getAs[Map[String, Long]]("duplicate_count") ==
+        Map("source" -> expDups._1, "target" -> expDups._2))
+      assert(o.getAs[Map[String, Long]]("missing_rows") ==
+        Map("source" -> expMissSrc, "target" -> expMissTgt))
+      assert(o.getAs[String]("test_status") == "FAILED")
+      val gotCol = res.colLvlTestReport.collect()
+        .map(r => r.getAs[String]("column_name") ->
+          r.getAs[Number]("unmatched_rows_count").longValue()).toMap
+      assert(gotCol == expCol)
+      assert(res.unmatchedRecords.keySet ==
+        expCol.collect { case (c, n) if n > 0 => s"prop/$c" }.toSet)
+      // the refetch path actually taken: only the Bloom prune plans might_contain
+      assert(res.cachedFrames.exists(_.queryExecution.analyzed.toString
+        .contains("might_contain")) == bloom, s"expected bloom=$bloom refetch")
+      res.unpersist()
+    }
+    check(spark, bloom = false)
+    val bloomSession = spark.newSession()
+    bloomSession.conf.set(Comparison.BroadcastMismatchKeysMaxConf, "0")
+    check(bloomSession, bloom = true)
   }
 
   test("tolerance property: rescue, NULL-poisoning and column blame match the documented model") {

@@ -1777,11 +1777,10 @@ class OperatorsSpec extends SparkSpec {
 
   test("bfsHops scopes the cached-partitioning conf: caller values restored, results unchanged") {
     import graft.operators.Graphs
-    // r15: bfsHops pins canChangeCachedPlanOutputPartitioning=false around
-    // its hop loop (the adjacency cache's hash(u) layout must stay visible
-    // so hops never re-exchange 2|E| rows). The caller's value — set,
-    // or unset — must survive, and a pre-set caller value must not change
-    // the result.
+    // bfsHops never writes this conf (its adjacency cache keeps its hash(u)
+    // layout under Spark's default, false). The caller's value — set, or
+    // unset — must survive, and a caller-set `true` must not change the
+    // result.
     val key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
     val g = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a", "b")
     val expected = Map(1L -> 0L, 2L -> 1L, 3L -> 2L)

@@ -487,74 +487,64 @@ class PlanSpec extends SparkSpec {
   }
 
   test("pagerank iteration: the cached 2|E| adjacency is never re-exchanged or sorted") {
-    // the columnar cache is hash(src)-partitioned + sorted at build; with
-    // canChangeCachedPlanOutputPartitioning=false every iteration join
-    // must consume it in place — the sf10 pathology this pins re-exchanged
+    // the columnar cache is hash(src)-partitioned + sorted at build; under
+    // Spark's default cached-plan planning every iteration join must
+    // consume it in place — the sf10 pathology this pins re-exchanged
     // all 239M adjacency rows per iteration through a lazy checkpoint's
     // UnknownPartitioning
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
-    val cacheKey = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    val prev = spark.conf.getOption(cacheKey)
-    spark.conf.set(cacheKey, "false")
-    try {
-      val pairs = spark.range(4000).selectExpr("id % 500 AS pa", "(id * 7 + 1) % 500 AS pb")
-        .filter("pa != pb")
-      val g = graft.operators.Graphs.buildPrGraph(pairs, "pa", "pb", 1000000000000L)
-      // ranks are checkpointed between iterations in production — without
-      // it the rank-side exchange's lineage reaches back into the nodes
-      // cache and would read as a (false) cache re-exchange here
-      val step = graft.operators.Graphs.prStep(
-        graft.operators.Graphs.prInit(g).localCheckpoint(false), g, dampPpm = 850000L)
-      step.queryExecution.toRdd.count() // final AQE plan
-      def collectPlans(p: SparkPlan): Seq[SparkPlan] = p match {
-        case a: AdaptiveSparkPlanExec => collectPlans(a.executedPlan)
-        case q: QueryStageExec => q +: collectPlans(q.plan)
-        case r: ReusedExchangeExec => r +: collectPlans(r.child)
-        case other => other +: other.children.flatMap(collectPlans)
-      }
-      val all = collectPlans(step.queryExecution.executedPlan)
-      val cachedScans = all.collect { case s: InMemoryTableScanExec => s }
-      assert(cachedScans.nonEmpty, "iteration must read the adjacency/node caches")
-      // a cached frame is "re-exchanged" when an exchange's NARROW child
-      // chain (projections/filters/sorts only — nothing that changes keys
-      // or cardinality) ends at a cached scan; the contribution
-      // aggregation's exchange above the join is legitimate (it ships
-      // |V|-bounded partial aggregates), so subtree containment alone
-      // would over-flag
-      import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter, ProjectExec, SortExec, WholeStageCodegenExec}
-      def narrowChild(p: SparkPlan): Option[SparkPlan] = p match {
-        case w: WholeStageCodegenExec => Some(w.child)
-        case i: InputAdapter => Some(i.child)
-        case q: QueryStageExec => Some(q.plan)
-        case r: ReusedExchangeExec => Some(r.child)
-        case pr: ProjectExec => Some(pr.child)
-        case f: FilterExec => Some(f.child)
-        case s: SortExec => Some(s.child)
-        case c: ColumnarToRowExec => Some(c.child)
-        case _ => None
-      }
-      @scala.annotation.tailrec
-      def reachesCache(p: SparkPlan): Boolean = p match {
-        case _: InMemoryTableScanExec => true
-        case other => narrowChild(other) match {
-          case Some(n) => reachesCache(n)
-          case None => false
-        }
-      }
-      all.collect { case e: ShuffleExchangeExec => e }.foreach { e =>
-        assert(!reachesCache(e.child),
-          s"cached adjacency/node frame re-exchanged in the iteration plan:\n$e")
-      }
-      spark.catalog.clearCache()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(cacheKey, v)
-        case None => spark.conf.unset(cacheKey)
+    val pairs = spark.range(4000).selectExpr("id % 500 AS pa", "(id * 7 + 1) % 500 AS pb")
+      .filter("pa != pb")
+    val g = graft.operators.Graphs.buildPrGraph(pairs, "pa", "pb", 1000000000000L)
+    // ranks are checkpointed between iterations in production — without
+    // it the rank-side exchange's lineage reaches back into the nodes
+    // cache and would read as a (false) cache re-exchange here
+    val step = graft.operators.Graphs.prStep(
+      graft.operators.Graphs.prInit(g).localCheckpoint(false), g, dampPpm = 850000L)
+    step.queryExecution.toRdd.count() // final AQE plan
+    def collectPlans(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => collectPlans(a.executedPlan)
+      case q: QueryStageExec => q +: collectPlans(q.plan)
+      case r: ReusedExchangeExec => r +: collectPlans(r.child)
+      case other => other +: other.children.flatMap(collectPlans)
+    }
+    val all = collectPlans(step.queryExecution.executedPlan)
+    val cachedScans = all.collect { case s: InMemoryTableScanExec => s }
+    assert(cachedScans.nonEmpty, "iteration must read the adjacency/node caches")
+    // a cached frame is "re-exchanged" when an exchange's NARROW child
+    // chain (projections/filters/sorts only — nothing that changes keys
+    // or cardinality) ends at a cached scan; the contribution
+    // aggregation's exchange above the join is legitimate (it ships
+    // |V|-bounded partial aggregates), so subtree containment alone
+    // would over-flag
+    import org.apache.spark.sql.execution.{ColumnarToRowExec, FilterExec, InputAdapter, ProjectExec, SortExec, WholeStageCodegenExec}
+    def narrowChild(p: SparkPlan): Option[SparkPlan] = p match {
+      case w: WholeStageCodegenExec => Some(w.child)
+      case i: InputAdapter => Some(i.child)
+      case q: QueryStageExec => Some(q.plan)
+      case r: ReusedExchangeExec => Some(r.child)
+      case pr: ProjectExec => Some(pr.child)
+      case f: FilterExec => Some(f.child)
+      case s: SortExec => Some(s.child)
+      case c: ColumnarToRowExec => Some(c.child)
+      case _ => None
+    }
+    @scala.annotation.tailrec
+    def reachesCache(p: SparkPlan): Boolean = p match {
+      case _: InMemoryTableScanExec => true
+      case other => narrowChild(other) match {
+        case Some(n) => reachesCache(n)
+        case None => false
       }
     }
+    all.collect { case e: ShuffleExchangeExec => e }.foreach { e =>
+      assert(!reachesCache(e.child),
+        s"cached adjacency/node frame re-exchanged in the iteration plan:\n$e")
+    }
+    spark.catalog.clearCache()
   }
 
   test("every catalog query has an oracle — additions cannot silently skip the gate") {
